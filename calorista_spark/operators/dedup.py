@@ -35,13 +35,3 @@ def exact_dedup(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def dedup_counts(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Per-key duplicate census: how many copies of each key exist.
-    Useful as the cheap pre-check before a full dedup rewrite."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
-    )

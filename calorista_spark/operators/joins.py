@@ -15,13 +15,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_dim(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """J2: dimension join with an explicit broadcast hint. AQE would
-    usually find this on its own; the hint removes the dependence on
-    size estimation for dims we KNOW are small (region/nation/...)."""
-    return fact.join(F.broadcast(dim), on, how)
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -416,17 +416,3 @@ def pq_assign_udf(codebook: np.ndarray):
         )
 
     return _assign
-
-
-def render_codebook_literal(codebook: np.ndarray) -> str:
-    """Frozen-constant rendering for a query module (repr round-trips
-    doubles exactly)."""
-    m, k, dsub = codebook.shape
-    rows = []
-    for j in range(m):
-        cents = ", ".join(
-            "[" + ", ".join(repr(float(v)) for v in codebook[j, c]) + "]"
-            for c in range(k)
-        )
-        rows.append(f"    [{cents}],")
-    return "[\n" + "\n".join(rows) + "\n]"

@@ -72,25 +72,6 @@ USER_PROFILE = T.StructType(
     ]
 )
 
-# Raw day payload (FIXTURES.md A2): {"food_entries": {"food_entry": X}}
-# where X is a list OR a single object (reference main.py:82-89). The
-# normalizer parses twice (array + single struct) and coalesces.
-def day_payload_schema(entry_schema: T.StructType = FOOD_ENTRY_WIRE) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(
-                "food_entries",
-                T.StructType(
-                    [
-                        T.StructField("food_entry", T.ArrayType(entry_schema), True),
-                    ]
-                ),
-                True,
-            )
-        ]
-    )
-
-
 # Multimodal asset column group (SURVEY §2.11 L5): opaque binary payload
 # + typed metadata, one row per asset.
 MULTIMODAL_ASSET = T.StructType(

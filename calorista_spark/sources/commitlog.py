@@ -101,8 +101,9 @@ every table format (Delta, Iceberg, Hudi) converges on:
   and DV purge all load O(affected partitions). Measured at 10^5
   fabricated file entries: a point read parses 1/2000 segments ~300×
   faster than full hydration, an incremental commit writes ~10^-5 of
-  the manifest bytes (scale_smoke.py ``manifest_scale``). Format-1
-  (inline) manifests stay fully readable; the next commit migrates.
+  the manifest bytes (scale_smoke.py ``manifest_scale``). This is the
+  only on-disk format: a commit JSON without ``manifest_format`` 2 and
+  ``stats_format`` 2 is refused with :class:`ManifestFormatError`.
 
 Scale notes: the manifest lists files, so a snapshot read plans from
 the manifest (no directory listing); history depth costs one tiny
@@ -180,6 +181,12 @@ class CommitConflictError(RuntimeError):
     """Another writer committed the version this writer raced for."""
 
 
+class ManifestFormatError(ValueError):
+    """A commit JSON is not in the one on-disk format the store reads:
+    segmented (``manifest_format`` 2) with UTC-normalized timestamp
+    stats (``stats_format`` 2)."""
+
+
 # -- file statistics (r10: data skipping) -----------------------------------
 #
 # Every committed parquet file gets a manifest stats entry: row count,
@@ -227,15 +234,6 @@ def _stat_value(v):
     if isinstance(v, datetime.date):
         return {"k": "d", "v": v.isoformat()}
     return None
-
-
-def _holds_datetime(value) -> bool:
-    """True when a predicate value (scalar, between-pair, or in-list)
-    contains a datetime.datetime (date subclasses excluded — only
-    timestamp-kind stats had the pre-r11 ambiguity)."""
-    if isinstance(value, (tuple, list)):
-        return any(isinstance(v, datetime.datetime) for v in value)
-    return isinstance(value, datetime.datetime)
 
 
 def _pruning_predicates(predicates: list[tuple], schema: T.StructType):
@@ -581,39 +579,6 @@ def _fsync_file(path: str) -> None:
 _DV_MAGIC = b"CLDV1\x00"
 
 
-def _reshape_partitions(
-    parts: dict[str, list[str]], removed: set[str], added: dict[str, list[str]]
-) -> dict[str, list[str]]:
-    """The partition→files map after a DML commit removed some files
-    (copy-on-write rewrites) and added others; partitions left with no
-    files drop out of the map entirely."""
-    out = {v: [f for f in fl if f not in removed] for v, fl in parts.items()}
-    for val, fl in added.items():
-        out[val] = sorted(out.get(val, []) + list(fl))
-    return {v: out[v] for v in sorted(out) if out[v]}
-
-
-def _clustering_after_dml(
-    m: dict, removed: set[str], added: dict[str, list[str]]
-) -> dict:
-    """Clustering entries that survive a DML commit: any partition
-    whose file set changed (a copy-on-write rewrite or an appended
-    update file) loses its layout guarantee; pure-DV commits (no file
-    changes) keep every entry — masking positions does not disturb the
-    on-disk order, and footer stats stay a conservative superset."""
-    clustering = m.get("clustering", {})
-    if not removed and not added:
-        return dict(clustering)
-    parts = m.get("partitions")
-    if parts is None:  # unpartitioned: any file change voids the entry
-        return {}
-    touched = set(added)
-    for v, fl in parts.items():
-        if any(f in removed for f in fl):
-            touched.add(v)
-    return {v: cl for v, cl in clustering.items() if v not in touched}
-
-
 def _decoded_path_col():
     """``_metadata.file_path`` as a decoded absolute filesystem path —
     JVM-side, no Python round-trip. The metadata column is a file URI
@@ -666,16 +631,20 @@ def _decode_dv(blob: bytes):
 # - A pruned read (:meth:`CommitLogStore.files_for`) tests the segment
 #   envelope FIRST and loads only segments whose envelope might match:
 #   driver parse cost is O(matching partitions' segments).
-# - Full hydration (:meth:`CommitLogStore.manifest` — the legacy
-#   all-files dict) still exists for maintenance ops (compact, vacuum,
-#   full-snapshot reads) that are inherently O(files).
+# - Full hydration (:meth:`CommitLogStore.manifest` — the all-files
+#   dict) serves maintenance ops (compact, vacuum, full-snapshot
+#   reads) that are inherently O(files).
 #
 # Segments are immutable and shared across versions; :meth:`vacuum`
 # GCs the ones no retained manifest references (age-gated, same
-# in-flight-writer defense as data dirs). Format 1 manifests (inline
-# files/stats/dv) remain fully readable — hydration is the identity.
+# in-flight-writer defense as data dirs). This is the only format the
+# store reads: :meth:`CommitLogStore.manifest_meta` refuses any commit
+# JSON not stamped ``manifest_format`` 2 and ``stats_format`` 2.
 
 MANIFEST_FORMAT = 2
+# stats_format 2: timestamp stats are kind 't' strictly UTC or kind
+# 'tn' naive (see the file-statistics notes above)
+STATS_FORMAT = 2
 
 # hydration/meta/segment caches per store instance are bounded by
 # these entry counts; entries are immutable once written, so eviction
@@ -852,22 +821,20 @@ class CommitLogStore:
         return meta
 
     def _hydrate(self, meta: dict) -> dict:
-        """The legacy all-files manifest dict for a commit JSON of any
-        format. Format 1 is the identity; format 2 loads every segment
-        — O(files), reserved for paths that genuinely plan the whole
-        snapshot (full reads, compact, vacuum, model checks)."""
-        if meta.get("manifest_format", 1) < 2:
-            return meta
+        """The all-files manifest dict (inline files/stats/dv/
+        partitions) of a commit JSON: loads every segment — O(files),
+        reserved for paths that genuinely plan the whole snapshot (full
+        reads, compact, vacuum, model checks)."""
         files: list[str] = []
         stats: dict[str, dict] = {}
         dv: dict[str, str] = {}
         parts: dict[str, list[str]] = {}
-        for val, sm in meta.get("segments", {}).items():
+        for val, sm in meta["segments"].items():
             seg = self._load_segment(sm["ref"])
             files.extend(seg["files"])
             stats.update(seg.get("stats", {}))
             dv.update(seg.get("dv", {}))
-            if meta.get("partitioned"):
+            if meta["partitioned"]:
                 parts[val] = list(seg["files"])
         full = {
             k: v
@@ -878,7 +845,7 @@ class CommitLogStore:
         full["stats"] = {f: stats[f] for f in sorted(stats)}
         if dv:
             full["dv"] = {f: dv[f] for f in sorted(dv)}
-        if meta.get("partitioned"):
+        if meta["partitioned"]:
             full["partitions"] = {v: parts[v] for v in sorted(parts)}
         return full
 
@@ -897,25 +864,35 @@ class CommitLogStore:
         return vs[-1] if vs else None
 
     def manifest_meta(self, version: int) -> dict:
-        """The commit JSON as written — for format-2 manifests a SMALL
-        document (scalars + per-partition segment refs/envelopes),
-        regardless of table size. Treat as read-only (cached)."""
+        """The commit JSON as written — a SMALL document (scalars +
+        per-partition segment refs/envelopes), regardless of table
+        size. Only ``manifest_format`` 2 with ``stats_format`` 2 is
+        accepted; anything else raises :class:`ManifestFormatError`.
+        Treat as read-only (cached)."""
         meta = self._meta_cache.get(version)
         if meta is None:
             with open(
                 os.path.join(self.commits_dir, f"v{version:08d}.json")
             ) as fh:
                 meta = json.load(fh)
+            found = (meta.get("manifest_format"), meta.get("stats_format"))
+            if found != (MANIFEST_FORMAT, STATS_FORMAT):
+                raise ManifestFormatError(
+                    f"v{version} in {self.path} has manifest_format="
+                    f"{found[0]!r}, stats_format={found[1]!r}; only "
+                    f"manifest_format={MANIFEST_FORMAT}, "
+                    f"stats_format={STATS_FORMAT} is supported"
+                )
             if len(self._meta_cache) >= _META_CACHE_MAX:
                 self._meta_cache.clear()
             self._meta_cache[version] = meta
         return meta
 
     def manifest(self, version: int) -> dict:
-        """The HYDRATED manifest (inline files/stats/dv/partitions,
-        format-1 shape) — O(files) for format-2 manifests; prefer
-        :meth:`manifest_meta` + selective segment loads on hot paths.
-        Treat as read-only (cached)."""
+        """The HYDRATED manifest (inline files/stats/dv/partitions) of
+        a format-2 commit (see :meth:`manifest_meta`) — O(files);
+        prefer :meth:`manifest_meta` + selective segment loads on hot
+        paths. Treat as read-only (cached)."""
         full = self._full_cache.get(version)
         if full is None:
             full = self._hydrate(self.manifest_meta(version))
@@ -924,36 +901,20 @@ class CommitLogStore:
             self._full_cache[version] = full
         return full
 
-    def _segment_index(self, meta: dict) -> dict[str, dict] | None:
-        """partition value → segment entry for a format-2 meta; None
-        for format-1 manifests (no segment structure to exploit)."""
-        if meta.get("manifest_format", 1) >= 2:
-            return meta.get("segments", {})
-        return None
+    def _segment_index(self, meta: dict) -> dict[str, dict]:
+        """partition value → segment entry of a commit JSON (the one
+        segment of an unpartitioned store is keyed ``""``); every
+        accepted manifest is segmented (see :meth:`manifest_meta`)."""
+        return meta["segments"]
 
     def _partition_slice(
         self, meta: dict, values: set[str]
     ) -> tuple[dict[str, list[str]], dict[str, dict], dict[str, str]]:
         """(partitions, stats, dv) restricted to ``values`` — loads
-        ONLY those partitions' segments on a format-2 manifest (the
-        O(touched) commit path); format-1 slices the inline maps."""
+        ONLY those partitions' segments (the O(touched) commit path);
+        ``meta`` is a segmented commit JSON, the only accepted format,
+        and values without a segment are skipped."""
         idx = self._segment_index(meta)
-        if idx is None:
-            parts = {
-                v: fl
-                for v, fl in meta.get("partitions", {}).items()
-                if v in values
-            }
-            in_slice = {f for fl in parts.values() for f in fl}
-            stats = {
-                f: st
-                for f, st in meta.get("stats", {}).items()
-                if f in in_slice
-            }
-            dv = {
-                f: p for f, p in meta.get("dv", {}).items() if f in in_slice
-            }
-            return parts, stats, dv
         parts, stats, dv = {}, {}, {}
         for val in values:
             sm = idx.get(val)
@@ -999,25 +960,17 @@ class CommitLogStore:
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY: one row per retained commit, newest first —
         the audit trail (version, op, committed_at, batch_id, file and
-        partition counts, DV presence). Meta-only on format-2
-        manifests: segment envelopes carry the counts, so a long
-        history over a huge table never hydrates file lists."""
+        partition counts, DV presence). Meta-only: segment envelopes
+        carry the counts, so a long history over a huge table never
+        hydrates file lists."""
         out = []
         for v in reversed(self.versions()):
             m = self.manifest_meta(v)
             idx = self._segment_index(m)
-            if idx is not None:
-                n_files = sum(sm["n_files"] for sm in idx.values())
-                n_parts = (len(idx) or None) if m.get("partitioned") else None
-                n_dv = sum(sm.get("n_dv", 0) for sm in idx.values())
-                rows = sum(sm["stats"].get("rows", 0) for sm in idx.values())
-            else:
-                n_files = len(m["files"])
-                n_parts = len(m.get("partitions", {})) or None
-                n_dv = len(m.get("dv", {})) or 0
-                rows = sum(
-                    st["rows"] for st in m.get("stats", {}).values()
-                )
+            n_files = sum(sm["n_files"] for sm in idx.values())
+            n_parts = (len(idx) or None) if m["partitioned"] else None
+            n_dv = sum(sm.get("n_dv", 0) for sm in idx.values())
+            rows = sum(sm["stats"].get("rows", 0) for sm in idx.values())
             out.append(
                 {
                     "version": v,
@@ -1090,55 +1043,25 @@ class CommitLogStore:
 
     def _files_for_pruned(
         self, predicates: list[tuple], version: int | None = None
-    ) -> tuple[
-        list[str], dict[str, str], dict[str, dict], dict[str, str] | None
-    ]:
+    ) -> tuple[list[str], dict[str, str], dict[str, dict], dict[str, str]]:
         """(pruned files, their DV map, their stats, file→partition) —
         the internal face of :meth:`files_for` that also surfaces the
         surviving files' metadata WITHOUT hydrating the manifest, so
         :meth:`read_where` and the DML planners stay O(matching
-        segments) on the driver. The partition map is ``None`` on
-        format-1 manifests (no segment structure)."""
+        segments) on the driver. Stats are UTC-normalized on every
+        accepted manifest (``stats_format`` 2, see
+        :meth:`manifest_meta`), so datetime predicates always prune."""
         v = self.latest_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"commit-log store at {self.path} is empty")
         meta = self.manifest_meta(v)
-        usable = predicates
-        if meta.get("stats_format", 1) < 2:
-            # pre-r11 manifests stored tz-naive timestamps under kind
-            # 't' WITHOUT UTC normalization — incomparable with the
-            # r11+ predicate conversion, so datetime predicates never
-            # prune against them (ADVICE r11); date predicates ('d')
-            # were always well-defined and keep pruning
-            usable = [
-                (c, op, val)
-                for c, op, val in predicates
-                if not _holds_datetime(val)
-            ]
         preds = _pruning_predicates(
-            usable, T.StructType.fromJson(json.loads(meta["schema"]))
+            predicates, T.StructType.fromJson(json.loads(meta["schema"]))
         )
         # footer stats are keyed by PHYSICAL column names; predicates
         # arrive logical (r13 column mapping)
         preds = _map_predicates(preds, meta.get("column_mapping") or {})
         idx = self._segment_index(meta)
-        if idx is None:
-            m = self.manifest(v)
-            stats = m.get("stats", {})
-            out = [f for f in m["files"] if _file_matches(stats.get(f), preds)]
-            out, _skip = self._bloom_prune(
-                out, preds,
-                T.StructType.fromJson(json.loads(meta["schema"])),
-                meta.get("column_mapping"),
-            )
-            keep = set(out)
-            self.last_prune_profile = None
-            return (
-                out,
-                {f: p for f, p in m.get("dv", {}).items() if f in keep},
-                {f: st for f, st in stats.items() if f in keep},
-                None,
-            )
         out: list[str] = []
         dvm: dict[str, str] = {}
         stm: dict[str, dict] = {}
@@ -1300,40 +1223,13 @@ class CommitLogStore:
             parent=latest,
         )
         if op == "append" and latest is not None:
-            meta = self.manifest_meta(latest)
-            if partition_by is not None and self._meta_partitioned(meta):
-                idx = self._segment_index(meta)
-                parent_parts = (
-                    {v: None for v in idx}
-                    if idx is not None
-                    else {
-                        v: list(fl)
-                        for v, fl in self.manifest(latest)[
-                            "partitions"
-                        ].items()
-                    }
-                )
-                touched = set(staged["partitions"]) & set(parent_parts)
-                auto_carry = {
-                    v: parent_parts[v]
-                    for v in parent_parts
-                    if v not in touched
-                }
+            auto_carry, carry_files = self._append_carry(
+                self.manifest_meta(latest), set(staged["partitions"])
+            )
+            if auto_carry is not None:
                 if carry_partitions:
                     auto_carry.update(carry_partitions)
                 carry_partitions = auto_carry
-                if touched:
-                    if idx is not None:
-                        sliced, _st, _dv = self._partition_slice(
-                            meta, touched
-                        )
-                    else:
-                        sliced = {v: parent_parts[v] for v in touched}
-                    carry_files = {v: list(fl) for v, fl in sliced.items()}
-            else:
-                parent_files = self.manifest(latest)["files"]
-                if parent_files:
-                    carry_files = {"": list(parent_files)}
         return self._commit_staged(
             staged,
             op=op,
@@ -1344,6 +1240,28 @@ class CommitLogStore:
             carry_partitions=carry_partitions,
             carry_files=carry_files,
             clustering=clustering,
+        )
+
+    def _append_carry(
+        self, meta: dict, written: set[str]
+    ) -> tuple[dict[str, None] | None, dict[str, list[str]] | None]:
+        """(carry_partitions, carry_files) that keep every file of the
+        parent ``meta`` in a commit adding ``written`` partitions — the
+        APPEND composition of :meth:`commit` and the Spark writer face.
+        Partitioned: parent partitions the commit does not write carry
+        as segment refs (never parsed), and the parent files of the
+        ones it does write carry file by file beside the new data.
+        Unpartitioned: carry_partitions is None and the ``""``
+        segment's files all carry."""
+        idx = self._segment_index(meta)
+        if meta["partitioned"]:
+            touched = written & set(idx)
+            carry_partitions = {v: None for v in idx if v not in touched}
+        else:
+            touched, carry_partitions = set(idx), None
+        sliced, _st, _dv = self._partition_slice(meta, touched)
+        return carry_partitions, (
+            {v: list(fl) for v, fl in sliced.items()} or None
         )
 
     def _staging_mapping(
@@ -1528,9 +1446,11 @@ class CommitLogStore:
         value of ``None`` carries that partition AS THE PARENT'S
         SEGMENT REF — its file list is never parsed, so composing a
         commit against a 10^6-file table costs O(touched partitions)
-        on the driver, not O(table). Explicit file lists remain
-        supported (compact's rewrite bookkeeping, format-1 parents)
-        and load only those partitions' segments."""
+        on the driver, not O(table). The parent is a segmented commit
+        JSON (the only accepted format); explicit file lists
+        (compact's rewrite bookkeeping) and ``carry_files`` load only
+        their partitions' segments, the ``""`` segment on an
+        unpartitioned parent."""
         latest = parent
         token = staged["token"]
         partitions = {v: list(fl) for v, fl in staged["partitions"].items()}
@@ -1538,34 +1458,18 @@ class CommitLogStore:
         stats = dict(staged["stats"])
         prev_meta = self.manifest_meta(latest) if latest is not None else {}
         prev_clustering = prev_meta.get("clustering", {})
-        prev_idx = (
-            self._segment_index(prev_meta) if latest is not None else None
-        )
         carry_refs: dict[str, dict] = {}
         explicit_carry: dict[str, list[str]] = {}
         for val, fl in (carry_partitions or {}).items():
             if fl is not None:
                 explicit_carry[val] = list(fl)
-            elif prev_idx is not None and val in prev_idx:
-                carry_refs[val] = prev_idx[val]
             else:
-                # format-1 parent (or missing segment): degrade to an
-                # explicit carry of the hydrated partition's files
-                explicit_carry[val] = list(
-                    self.manifest(latest)["partitions"][val]
-                )
+                carry_refs[val] = self._segment_index(prev_meta)[val]
         need_vals = set(explicit_carry) | set(carry_files or {})
         if need_vals and latest is not None:
-            if prev_idx is None and not self._meta_partitioned(prev_meta):
-                # format-1 unpartitioned parent: no partition map to
-                # slice — the hydrated manifest IS the slice
-                pm = self.manifest(latest)
-                prev_stats = pm.get("stats", {})
-                prev_dv = pm.get("dv", {})
-            else:
-                _, prev_stats, prev_dv = self._partition_slice(
-                    prev_meta, need_vals
-                )
+            _, prev_stats, prev_dv = self._partition_slice(
+                prev_meta, need_vals
+            )
         else:
             prev_stats, prev_dv = {}, {}
         files = list(new_files)
@@ -1694,16 +1598,6 @@ class CommitLogStore:
             manifest["retired_columns"] = sorted(retired)
         if carry_refs:
             manifest["__carry_segments__"] = carry_refs
-        if latest is not None and (
-            carry_refs or explicit_carry or carry_files
-        ):
-            # carried per-file stats keep their PARENT's stats_format:
-            # stamping a pre-r11 parent's naive timestamp stats as
-            # format 2 would re-enable datetime pruning against values
-            # that were never UTC-normalized (silent misprune on a
-            # non-UTC driver). Only a commit that carries nothing old
-            # (full rewrite / fresh append chain) upgrades the marker.
-            manifest["stats_format"] = prev_meta.get("stats_format", 1)
         return self._publish(manifest, token)
 
     def _publish(self, manifest: dict, token: str) -> int:
@@ -1739,12 +1633,10 @@ class CommitLogStore:
             pc = self.manifest_meta(parent).get("constraints")
             if pc:
                 manifest["constraints"] = pc
-        # stats_format 2 = r11+ timestamp kinds ('t' strictly UTC, 'tn'
-        # naive). Manifests WITHOUT the marker may hold pre-r11 naive
-        # values under kind 't'; files_for treats their datetime
-        # predicates as unprunable (ADVICE r11) instead of mispruning
-        # on a non-UTC driver.
-        manifest.setdefault("stats_format", 2)
+        # every stat this store holds was lifted by the current
+        # writer ('t' strictly UTC, 'tn' naive), so every commit is
+        # stats_format 2 — manifest_meta refuses anything else
+        manifest["stats_format"] = STATS_FORMAT
         # manifest_format 2 (r12): per-file bulk leaves the commit
         # JSON for content-addressed per-partition segments — publish
         # cost O(touched partitions), untouched segments dedupe to the
@@ -1795,10 +1687,10 @@ class CommitLogStore:
         timestamp keys, whose collect round-trip is DST-ambiguous)
         conservatively keeps the file in the rewrite set.
 
-        r12 segmented manifests: ``manifest`` may be a format-2 META —
-        only the TOUCHED partitions' segments are loaded (file lists,
-        stats, DVs); untouched partitions come back as ``None`` carry
-        entries, which :meth:`_commit_staged` turns into parent
+        r12 segmented manifests: ``manifest`` is the parent's commit
+        JSON — only the TOUCHED partitions' segments are loaded (file
+        lists, stats, DVs); untouched partitions come back as ``None``
+        carry entries, which :meth:`_commit_staged` turns into parent
         segment refs without ever parsing their file lists."""
         from pyspark.sql import functions as F
 
@@ -1807,8 +1699,6 @@ class CommitLogStore:
                 f"incoming batch lacks partition column {partition_by!r}"
             )
         schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        idx = self._segment_index(manifest)
-        by_ref = idx is not None
         data_keys = [
             k
             for k in (keys or [])
@@ -1846,29 +1736,15 @@ class CommitLogStore:
             raise ValueError(
                 f"null partition values in batch column {partition_by!r}"
             )
-        all_vals = set(idx) if by_ref else set(manifest["partitions"])
-        if by_ref:
-            # O(touched): only the touched partitions' segments load;
-            # the rest carry as refs (None), never parsed
-            prev_parts, stats, prev_dv = self._partition_slice(
-                manifest, all_vals & touched
-            )
-            carry: dict[str, list[str] | None] = {
-                v: None for v in all_vals - touched
-            }
-        else:
-            prev_parts = {
-                v: fl
-                for v, fl in manifest["partitions"].items()
-                if v in touched
-            }
-            stats = manifest.get("stats", {})
-            prev_dv = manifest.get("dv", {})
-            carry = {
-                v: fl
-                for v, fl in manifest["partitions"].items()
-                if v not in touched
-            }
+        all_vals = set(self._segment_index(manifest))
+        # O(touched): only the touched partitions' segments load; the
+        # rest carry as refs (None), never parsed
+        prev_parts, stats, prev_dv = self._partition_slice(
+            manifest, all_vals & touched
+        )
+        carry: dict[str, list[str] | None] = {
+            v: None for v in all_vals - touched
+        }
         carry_files: dict[str, list[str]] = {}
         read_files: list[str] = []
         for val, fl in prev_parts.items():
@@ -1908,7 +1784,6 @@ class CommitLogStore:
         spark: SparkSession,
         incoming: DataFrame,
         meta: dict,
-        version: int,
         keys: list[str] | None,
     ) -> tuple[DataFrame, list[str] | None]:
         """File pruning for MERGE on an UNPARTITIONED store: the same
@@ -1936,15 +1811,10 @@ class CommitLogStore:
             if k in incoming.columns
             and not isinstance(ftypes.get(k), T.TimestampType)
         ]
-        idx = self._segment_index(meta)
-        if idx is not None:
-            parts, stats, dv = self._partition_slice(meta, set(idx))
-            files = sorted(f for fl in parts.values() for f in fl)
-        else:
-            m = self.manifest(version)
-            files = sorted(m["files"])
-            stats = m.get("stats", {})
-            dv = m.get("dv", {})
+        parts, stats, dv = self._partition_slice(
+            meta, set(self._segment_index(meta))
+        )
+        files = sorted(f for fl in parts.values() for f in fl)
         preds = []
         if data_keys:
             aggs = []
@@ -2023,26 +1893,22 @@ class CommitLogStore:
 
         if (
             mnew.get("partition_by") != pb
-            or not self._meta_partitioned(mold)
-            or not self._meta_partitioned(mnew)
+            or not mold["partitioned"]
+            or not mnew["partitioned"]
             or shape(mnew["schema"]) != shape(mold["schema"])
             or mold.get("keys") != mnew.get("keys")
         ):
             return False
         io, inw = self._segment_index(mold), self._segment_index(mnew)
-        if io is not None and inw is not None:
-            # fast path: identical segment refs ⇒ identical files+DVs
-            rest = {
-                v
-                for v in touched
-                if io.get(v) is None
-                or (io.get(v) or {}).get("ref")
-                != (inw.get(v) or {}).get("ref")
-            }
-            if not rest:
-                return True
-        else:
-            rest = set(touched)
+        # fast path: identical segment refs ⇒ identical files+DVs
+        rest = {
+            v
+            for v in touched
+            if io.get(v) is None
+            or (io.get(v) or {}).get("ref") != (inw.get(v) or {}).get("ref")
+        }
+        if not rest:
+            return True
         po, _so, dv_old = self._partition_slice(mold, rest)
         pn, _sn, dv_new = self._partition_slice(mnew, rest)
         for v in rest:
@@ -2052,13 +1918,6 @@ class CommitLogStore:
             if any(dv_old.get(f) != dv_new.get(f) for f in fo):
                 return False
         return True
-
-    def _meta_partitioned(self, meta: dict) -> bool:
-        """Whether a commit JSON (either format) describes a
-        partition-mapped snapshot."""
-        if meta.get("manifest_format", 1) >= 2:
-            return bool(meta.get("partitioned"))
-        return "partitions" in meta
 
     def _merge_commit_with_retries(
         self,
@@ -2112,16 +1971,8 @@ class CommitLogStore:
                     # files + DVs identical in both heads, and carried
                     # files live inside touched partitions by
                     # construction.
-                    m2 = self.manifest_meta(new_latest)
-                    idx2 = self._segment_index(m2)
-                    if idx2 is not None:
-                        carry = {v: None for v in idx2 if v not in touched}
-                    else:
-                        carry = {
-                            v: fl
-                            for v, fl in m2["partitions"].items()
-                            if v not in touched
-                        }
+                    idx2 = self._segment_index(self.manifest_meta(new_latest))
+                    carry = {v: None for v in idx2 if v not in touched}
                     latest = new_latest
                     continue
                 latest = new_latest
@@ -2191,14 +2042,14 @@ class CommitLogStore:
                 else meta.get("partition_by")
             )
             carry_files = None
-            if pb is None or not self._meta_partitioned(meta):
+            if pb is None or not meta["partitioned"]:
                 carry, touched = None, None
                 if pb is None:
                     # unpartitioned store: file-granular scoping — only
                     # files whose key stats can intersect the batch are
                     # read/rewritten, the rest carry by reference
                     target, kept = self._scope_unpartitioned_files(
-                        spark, incoming, meta, latest, keys
+                        spark, incoming, meta, keys
                     )
                     if kept:
                         carry_files = {"": kept}
@@ -2272,13 +2123,13 @@ class CommitLogStore:
                     if partition_by is not None
                     else meta.get("partition_by")
                 )
-                if pb is None or not self._meta_partitioned(meta):
+                if pb is None or not meta["partitioned"]:
                     if pb is None:
                         # unpartitioned: file-granular scoping over the
                         # FULL batch (delete rows included), so a
                         # tombstone's file is always in the rewrite set
                         target, kept = self._scope_unpartitioned_files(
-                            spark, batch, meta, latest, keys
+                            spark, batch, meta, keys
                         )
                         if kept:
                             carry_files = {"": kept}
@@ -2358,7 +2209,7 @@ class CommitLogStore:
             if partition_by is not None
             else meta.get("partition_by")
         )
-        if pb is None or not self._meta_partitioned(meta):
+        if pb is None or not meta["partitioned"]:
             raise ValueError(
                 "overwrite_partitions requires a partitioned store "
                 "(commit with partition_by first)"
@@ -2373,18 +2224,11 @@ class CommitLogStore:
         }
         if None in touched:
             raise ValueError(f"null partition values in column {pb!r}")
-        idx = self._segment_index(meta)
-        if idx is not None:
-            # untouched partitions carry as segment refs — the commit
-            # never parses their file lists (O(touched) driver cost)
-            carry = {v: None for v in idx if v not in touched}
-        else:
-            m = self.manifest(latest)
-            carry = {
-                v: fl
-                for v, fl in m["partitions"].items()
-                if v not in touched
-            }
+        # untouched partitions carry as segment refs — the commit never
+        # parses their file lists (O(touched) driver cost)
+        carry = {
+            v: None for v in self._segment_index(meta) if v not in touched
+        }
         return self.commit(
             df,
             op="overwrite_partitions",
@@ -2411,7 +2255,7 @@ class CommitLogStore:
     ) -> int:
         """Publish a commit that changes ONLY table metadata: every
         data file (and DV, and per-file stats) carries from the parent
-        by reference — on a segmented manifest the driver never parses
+        by reference — on a partitioned store the driver never parses
         a single file list, so a rename of a 10^6-file table costs one
         manifest write."""
         staged = {
@@ -2423,24 +2267,8 @@ class CommitLogStore:
             "column_mapping": mapping,
             "retired_columns": retired,
         }
-        carry_partitions: dict[str, list[str] | None] | None = None
-        carry_files: dict[str, list[str]] | None = None
-        if self._meta_partitioned(meta):
-            idx = self._segment_index(meta)
-            carry_partitions = (
-                {v: None for v in idx}
-                if idx is not None
-                else {
-                    v: list(fl)
-                    for v, fl in self.manifest(latest)[
-                        "partitions"
-                    ].items()
-                }
-            )
-        else:
-            files = self.manifest(latest)["files"]
-            if files:
-                carry_files = {"": list(files)}
+        # an append of nothing: every parent file carries
+        carry_partitions, carry_files = self._append_carry(meta, set())
         return self._commit_staged(
             staged,
             op=op,
@@ -2600,9 +2428,9 @@ class CommitLogStore:
         rewritten (time travel to the undone versions still works, the
         audit trail shows the restore), and every data file carries by
         reference, so restoring a 10^6-file table costs one manifest
-        write: on a segmented (format-2) partitioned target the
-        partitions carry as the TARGET's content-addressed segment
-        refs without their file lists ever parsing.
+        write: on a partitioned target the partitions carry as the
+        TARGET's content-addressed segment refs without their file
+        lists ever parsing.
 
         The replay ledger is the one thing taken from the HEAD, not
         the target: ``last_batch_id`` and the per-writer ``txn`` map
@@ -2627,7 +2455,6 @@ class CommitLogStore:
                 f"version v{to_version} is not retained in {self.path} "
                 "(never committed, or expired by vacuum)"
             ) from None
-        tidx = self._segment_index(tmeta)
         for _attempt in range(5):
             latest = self.latest_version()
             manifest = {
@@ -2638,9 +2465,6 @@ class CommitLogStore:
                 "schema": tmeta["schema"],
                 "batch_id": None,
                 "last_batch_id": self.last_batch_id(),
-                # carried stats keep the TARGET's stats_format: naive
-                # pre-r11 timestamp stats must stay non-prunable
-                "stats_format": tmeta.get("stats_format", 1),
             }
             for k in ("keys", "column_mapping", "retired_columns"):
                 if tmeta.get(k) is not None:
@@ -2649,30 +2473,25 @@ class CommitLogStore:
             # semantics): explicit set blocks the head-carry in
             # _publish, so constraints added after the target vanish
             manifest["constraints"] = tmeta.get("constraints") or {}
-            if tidx is not None and tmeta.get("partitioned"):
+            if tmeta.get("clustering"):
+                manifest["clustering"] = tmeta["clustering"]
+            if tmeta["partitioned"]:
                 # O(partitions): target segments carry by reference
                 manifest["files"] = []
                 manifest["partitions"] = {}
                 manifest["stats"] = {}
                 if tmeta.get("partition_by") is not None:
                     manifest["partition_by"] = tmeta["partition_by"]
-                if tmeta.get("clustering"):
-                    manifest["clustering"] = tmeta["clustering"]
-                manifest["__carry_segments__"] = dict(tidx)
+                manifest["__carry_segments__"] = dict(
+                    self._segment_index(tmeta)
+                )
             else:
+                # the one "" segment re-publishes from its file list
                 full = self.manifest(to_version)
                 manifest["files"] = list(full["files"])
                 manifest["stats"] = dict(full.get("stats", {}))
                 if full.get("dv"):
                     manifest["dv"] = dict(full["dv"])
-                if "partitions" in full:
-                    manifest["partitions"] = {
-                        v: list(fl)
-                        for v, fl in full["partitions"].items()
-                    }
-                    manifest["partition_by"] = full.get("partition_by")
-                if full.get("clustering"):
-                    manifest["clustering"] = full["clustering"]
             try:
                 return self._publish(manifest, uuid.uuid4().hex)
             except CommitConflictError:
@@ -2718,7 +2537,7 @@ class CommitLogStore:
                 f"commit-log store at {self.path} is empty"
             )
         try:
-            meta = self.manifest_meta(v)
+            self.manifest_meta(v)
         except FileNotFoundError:
             raise ValueError(
                 f"version v{v} is not retained in {self.path} "
@@ -2758,7 +2577,6 @@ class CommitLogStore:
             "batch_id": None,
             "last_batch_id": None,
             "stats": dict(full.get("stats", {})),
-            "stats_format": meta.get("stats_format", 1),
         }
         if full.get("dv"):
             manifest["dv"] = dict(full["dv"])
@@ -3244,7 +3062,7 @@ class CommitLogStore:
         # name first, then the projection renames the payload)
         mapping = m.get("column_mapping") or {}
         new_parts: dict[str, list[str]] = {}
-        if pb is not None and self._meta_partitioned(m):
+        if pb is not None and m["partitioned"]:
             staged = df.withColumn("__part", F.col(pb).cast("string"))
             staged = _to_physical(staged, mapping)
             if coalesce_partitions:
@@ -3319,7 +3137,7 @@ class CommitLogStore:
         new_parts: dict[str, list[str]],
         new_stats: dict[str, dict],
         dv_updates: dict[str, str],
-        file_part: dict[str, str] | None,
+        file_part: dict[str, str],
     ) -> int:
         """Compose and publish the manifest of a DELETE/UPDATE/REORG
         commit. ``removed`` = copy-on-write-replaced files,
@@ -3329,12 +3147,12 @@ class CommitLogStore:
         partition of every file in removed/dv_updates (from
         :meth:`_files_for_pruned`).
 
-        On segmented manifests the composition is O(affected
-        partitions): only segments holding a removed/DV-updated file
-        or receiving output are loaded and recomposed; every other
-        partition carries as the parent's segment ref — the driver
-        never parses the rest of a 10^6-file table (VERDICT r11 #4).
-        Format-1 manifests fall back to full composition."""
+        The composition is O(affected partitions): only segments
+        holding a removed/DV-updated file or receiving output are
+        loaded and recomposed; every other partition carries as the
+        parent's segment ref — the driver never parses the rest of a
+        10^6-file table (VERDICT r11 #4). An unpartitioned store is
+        the one segment keyed ``""``."""
         prev_last_batch = meta.get("last_batch_id")
         last_batch = (
             batch_id
@@ -3342,69 +3160,18 @@ class CommitLogStore:
             and (prev_last_batch is None or batch_id > prev_last_batch)
             else prev_last_batch
         )
-        new_files = sorted(f for fl in new_parts.values() for f in fl)
         idx = self._segment_index(meta)
-        if idx is None or file_part is None:
-            m = self.manifest(latest)
-            stats = {
-                f: st
-                for f, st in m.get("stats", {}).items()
-                if f not in removed
-            }
-            stats.update(new_stats)
-            new_dv = {
-                f: p
-                for f, p in m.get("dv", {}).items()
-                if f not in removed
-            }
-            new_dv.update(dv_updates)
-            manifest = {
-                "version": latest + 1,
-                "parent": latest,
-                "op": op,
-                "files": sorted(
-                    [f for f in m["files"] if f not in removed] + new_files
-                ),
-                "schema": m["schema"],
-                "batch_id": batch_id,
-                "last_batch_id": last_batch,
-                "stats": {f: stats[f] for f in sorted(stats)},
-            }
-            if new_dv:
-                manifest["dv"] = {f: new_dv[f] for f in sorted(new_dv)}
-            for k in ("partition_by", "keys"):
-                if k in m:
-                    manifest[k] = m[k]
-            for k in ("column_mapping", "retired_columns"):
-                if k in meta:
-                    manifest[k] = meta[k]
-            if "partitions" in m:
-                manifest["partitions"] = _reshape_partitions(
-                    m["partitions"], removed, new_parts
-                )
-            if "clustering" in m:
-                kept = _clustering_after_dml(m, removed, new_parts)
-                if kept:
-                    manifest["clustering"] = kept
-            if any(f not in removed for f in m.get("stats", {})):
-                # surviving files keep parent-era stats: propagate the
-                # parent's stats_format so pre-r11 naive timestamp
-                # stats never get re-marked prunable (see _commit_staged)
-                manifest["stats_format"] = meta.get("stats_format", 1)
-            return self._publish(manifest, token)
         affected = {file_part[f] for f in removed | set(dv_updates)} | set(
             new_parts
         )
         parts_slice, stats_slice, dv_slice = self._partition_slice(
             meta, affected
         )
-        partitioned = self._meta_partitioned(meta)
         files: list[str] = []
         stats: dict[str, dict] = {}
         dv: dict[str, str] = {}
         out_parts: dict[str, list[str]] = {}
         voided: set[str] = set()
-        carried_old_stats = False
         for val in sorted(affected):
             old_fl = parts_slice.get(val, [])
             fl = sorted(
@@ -3421,8 +3188,6 @@ class CommitLogStore:
                 st = new_stats.get(f)
                 if st is None:
                     st = stats_slice.get(f)
-                    if st is not None:
-                        carried_old_stats = True
                 if st is not None:
                     stats[f] = st
                 d = dv_updates.get(f) or dv_slice.get(f)
@@ -3443,7 +3208,7 @@ class CommitLogStore:
         for k in ("partition_by", "keys", "column_mapping", "retired_columns"):
             if k in meta:
                 manifest[k] = meta[k]
-        if partitioned:
+        if meta["partitioned"]:
             manifest["partitions"] = out_parts
         clustering = meta.get("clustering", {})
         kept = {v: cl for v, cl in clustering.items() if v not in voided}
@@ -3452,8 +3217,6 @@ class CommitLogStore:
         carry_refs = {v: idx[v] for v in idx if v not in affected}
         if carry_refs:
             manifest["__carry_segments__"] = carry_refs
-        if carry_refs or carried_old_stats:
-            manifest["stats_format"] = meta.get("stats_format", 1)
         return self._publish(manifest, token)
 
     def delete_where(
@@ -3936,22 +3699,15 @@ class CommitLogStore:
         mc_meta = self.manifest_meta(child)
         ip = self._segment_index(mp_meta)
         ic = self._segment_index(mc_meta)
-        if ip is None or ic is None:
-            mp, mc = self.manifest(parent), self.manifest(child)
-            pdv, cdv = mp.get("dv", {}), mc.get("dv", {})
-            pid = {(f, pdv.get(f)) for f in mp["files"]}
-            cid = {(f, cdv.get(f)) for f in mc["files"]}
-        else:
-            vals = {
-                v
-                for v in set(ip) | set(ic)
-                if (ip.get(v) or {}).get("ref")
-                != (ic.get(v) or {}).get("ref")
-            }
-            pp, _ps, pdv = self._partition_slice(mp_meta, vals)
-            pc, _cs, cdv = self._partition_slice(mc_meta, vals)
-            pid = {(f, pdv.get(f)) for fl in pp.values() for f in fl}
-            cid = {(f, cdv.get(f)) for fl in pc.values() for f in fl}
+        vals = {
+            v
+            for v in set(ip) | set(ic)
+            if (ip.get(v) or {}).get("ref") != (ic.get(v) or {}).get("ref")
+        }
+        pp, _ps, pdv = self._partition_slice(mp_meta, vals)
+        pc, _cs, cdv = self._partition_slice(mc_meta, vals)
+        pid = {(f, pdv.get(f)) for fl in pp.values() for f in fl}
+        cid = {(f, cdv.get(f)) for fl in pc.values() for f in fl}
         pre = sorted(f for f, _ in pid - cid)
         post = sorted(f for f, _ in cid - pid)
         return pre, post, pdv, cdv
@@ -4406,9 +4162,8 @@ class CommitLogStore:
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         clustering = meta.get("clustering", {})
         pb = meta.get("partition_by")
-        idx = self._segment_index(meta)
-        if pb is None or not self._meta_partitioned(meta):
-            m = self.manifest(latest)  # one segment (or format-1)
+        if pb is None or not meta["partitioned"]:
+            m = self.manifest(latest)  # the one "" segment
             stats = m.get("stats", {})
             dv = m.get("dv", {})
             fl = m["files"]
@@ -4451,77 +4206,32 @@ class CommitLogStore:
                 sort_expr=zval,
             )
         todo: dict[str, int] = {}
-        if idx is not None:
-            # segment-selective (r12): the envelope carries n_files /
-            # total bytes / n_dv, so the scheduled-maintenance sweep
-            # picks its work list META-ONLY and loads only the
-            # partitions it will actually rewrite — O(todo) driver
-            # cost on a 10^6-file table whose partitions mostly
-            # already meet the bin target
-            for val, sm in idx.items():
-                if partitions is not None and val not in partitions:
-                    continue
-                want = max(
-                    1,
-                    math.ceil(
-                        sm["stats"].get("bytes", 0) / target_file_bytes
-                    ),
-                )
-                if (
-                    sm["n_files"] <= want
-                    and sm.get("n_dv", 0) == 0
-                    and (
-                        cluster_by is None
-                        or clustering.get(val) == cluster_tag
-                    )
-                ):
-                    continue
-                todo[val] = want
-            if not todo:
-                return latest
-            parts, _stats_slice, dv = self._partition_slice(meta, set(todo))
-            carry: dict[str, list[str] | None] = {
-                val: None for val in idx if val not in todo
-            }
-        else:
-            m = self.manifest(latest)
-            stats = m.get("stats", {})
-            dv = m.get("dv", {})
-
-            def nbytes(f: str) -> int:
-                st = stats.get(f)
-                if st is not None:
-                    return st["bytes"]
-                return os.path.getsize(os.path.join(self.path, f))
-
-            all_parts: dict[str, list[str]] = m["partitions"]
-            for val, fl in all_parts.items():
-                if partitions is not None and val not in partitions:
-                    continue
-                want = max(
-                    1,
-                    math.ceil(
-                        sum(nbytes(f) for f in fl) / target_file_bytes
-                    ),
-                )
-                if (
-                    len(fl) <= want
-                    and not any(f in dv for f in fl)
-                    and (
-                        cluster_by is None
-                        or clustering.get(val) == cluster_tag
-                    )
-                ):
-                    continue
-                todo[val] = want
-            if not todo:
-                return latest
-            parts = {val: all_parts[val] for val in todo}
-            carry = {
-                val: fl
-                for val, fl in all_parts.items()
-                if val not in todo
-            }
+        # segment-selective (r12): the envelope carries n_files / total
+        # bytes / n_dv, so the scheduled-maintenance sweep picks its
+        # work list META-ONLY and loads only the partitions it will
+        # actually rewrite — O(todo) driver cost on a 10^6-file table
+        # whose partitions mostly already meet the bin target
+        idx = self._segment_index(meta)
+        for val, sm in idx.items():
+            if partitions is not None and val not in partitions:
+                continue
+            want = max(
+                1,
+                math.ceil(sm["stats"].get("bytes", 0) / target_file_bytes),
+            )
+            if (
+                sm["n_files"] <= want
+                and sm.get("n_dv", 0) == 0
+                and (cluster_by is None or clustering.get(val) == cluster_tag)
+            ):
+                continue
+            todo[val] = want
+        if not todo:
+            return latest
+        parts, _stats_slice, dv = self._partition_slice(meta, set(todo))
+        carry: dict[str, list[str] | None] = {
+            val: None for val in idx if val not in todo
+        }
         touched_files = [f for val in todo for f in parts[val]]
         df = self._read_files(
             spark, touched_files, schema, dv=dv,
@@ -4618,27 +4328,21 @@ class CommitLogStore:
             raise FileNotFoundError(f"commit-log store at {self.path} is empty")
         meta = self.manifest_meta(latest)
         idx = self._segment_index(meta)
-        if idx is None:
-            m = self.manifest(latest)
-            dv = dict(m.get("dv", {}))
-            stats = m.get("stats", {})
-            file_part = None
-        else:
-            # segment-selective: only segments that HOLD deletion
-            # vectors (n_dv > 0 in the envelope) are parsed — a purge
-            # sweep over a mostly-clean 10^6-file table reads metadata
-            # proportional to its DV'd partitions
-            dv, stats, file_part = {}, {}, {}
-            for val in sorted(idx):
-                if idx[val].get("n_dv", 0) == 0:
-                    continue
-                seg = self._load_segment(idx[val]["ref"])
-                seg_stats = seg.get("stats", {})
-                for f, p in seg.get("dv", {}).items():
-                    dv[f] = p
-                    file_part[f] = val
-                    if f in seg_stats:
-                        stats[f] = seg_stats[f]
+        # segment-selective: only segments that HOLD deletion vectors
+        # (n_dv > 0 in the envelope) are parsed — a purge sweep over a
+        # mostly-clean 10^6-file table reads metadata proportional to
+        # its DV'd partitions
+        dv, stats, file_part = {}, {}, {}
+        for val in sorted(idx):
+            if idx[val].get("n_dv", 0) == 0:
+                continue
+            seg = self._load_segment(idx[val]["ref"])
+            seg_stats = seg.get("stats", {})
+            for f, p in seg.get("dv", {}).items():
+                dv[f] = p
+                file_part[f] = val
+                if f in seg_stats:
+                    stats[f] = seg_stats[f]
         if not dv:
             return latest
         heavy: list[str] = []
@@ -4717,10 +4421,9 @@ class CommitLogStore:
         referenced_segs: set[str] = set()
         for v in keep:
             idx = self._segment_index(self.manifest_meta(v))
-            if idx is not None:
-                referenced_segs.update(
-                    os.path.basename(sm["ref"]) for sm in idx.values()
-                )
+            referenced_segs.update(
+                os.path.basename(sm["ref"]) for sm in idx.values()
+            )
             mm = self.manifest(v)
             for f in list(mm["files"]) + list(mm.get("dv", {}).values()):
                 referenced_tokens.add(f.split(os.sep)[1])
@@ -5069,10 +4772,7 @@ def make_commitlog_changes_datasource():
                 parent = meta.get("parent")
                 if parent is None:
                     idx = store._segment_index(meta)
-                    if idx is not None:
-                        n = sum(sm["n_files"] for sm in idx.values())
-                    else:
-                        n = len(meta["files"])
+                    n = sum(sm["n_files"] for sm in idx.values())
                 else:
                     pre, post, _pdv, _cdv = store._file_diff(parent, v)
                     n = len(pre) + len(post)

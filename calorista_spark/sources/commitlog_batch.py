@@ -487,44 +487,11 @@ def make_commitlog_batch_datasource():
                         self.mapping,
                         cons,
                     )
-            carry_partitions: dict[str, list[str] | None] | None = None
-            carry_files: dict[str, list[str]] | None = None
+            carry_partitions, carry_files = None, None
             if not self.overwrite and self.parent is not None:
-                meta = store.manifest_meta(self.parent)
-                if self.partition_by is not None:
-                    idx = store._segment_index(meta)
-                    parent_parts = (
-                        {v: None for v in idx}
-                        if idx is not None
-                        else {
-                            v: list(fl)
-                            for v, fl in store.manifest(self.parent)[
-                                "partitions"
-                            ].items()
-                        }
-                    )
-                    touched = set(partitions) & set(parent_parts)
-                    carry_partitions = {
-                        v: parent_parts[v]
-                        for v in parent_parts
-                        if v not in touched
-                    }
-                    if touched:
-                        if idx is not None:
-                            sliced, _st, _dv = store._partition_slice(
-                                meta, touched
-                            )
-                        else:
-                            sliced = {
-                                v: parent_parts[v] for v in touched
-                            }
-                        carry_files = {
-                            v: list(fl) for v, fl in sliced.items()
-                        }
-                else:
-                    parent_files = store.manifest(self.parent)["files"]
-                    if parent_files:
-                        carry_files = {"": list(parent_files)}
+                carry_partitions, carry_files = store._append_carry(
+                    store.manifest_meta(self.parent), set(partitions)
+                )
             store._commit_staged(
                 staged,
                 op="overwrite" if self.overwrite else "append",

@@ -33,15 +33,6 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def store_exists(path: str) -> bool:
-    if not os.path.isdir(path):
-        return False
-    return any(
-        name == "_SUCCESS" or name.startswith(("date=", "part-"))
-        for name in os.listdir(path)
-    )
-
-
 def store_has_data(path: str) -> bool:
     """True only if actual parquet data files exist — a store written
     from an empty frame has _SUCCESS but no parts and cannot be read

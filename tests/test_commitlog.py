@@ -98,7 +98,7 @@ def test_concurrent_writer_conflict_detected(spark, tmp_path):
 
     final = os.path.join(store.commits_dir, "v00000003.json")
     with open(final, "w") as fh:
-        json.dump(dict(store.manifest(2), version=3, parent=2), fh)
+        json.dump(dict(store.manifest_meta(2), version=3, parent=2), fh)
     with mock.patch.object(CommitLogStore, "latest_version", return_value=2):
         with pytest.raises(CommitConflictError, match="concurrently"):
             store.commit(_df(spark, [(1, "C")]), expect_version=2)
@@ -1484,50 +1484,63 @@ def test_dv_read_decodes_sidecars_executor_side(spark, tmp_path, monkeypatch):
     assert calls["n"] == 0, "driver decoded a DV sidecar past the cap"
 
 
-def test_pre_r11_manifests_never_prune_on_timestamps(spark, tmp_path):
-    """ADVICE r11: manifests persisted by pre-r11 code stored naive
-    timestamp stats under kind 't' WITHOUT UTC normalization, so the
-    r11 predicate conversion could still misprune them on a non-UTC
-    driver. New manifests carry ``stats_format: 2``; a manifest
-    LACKING the marker must treat datetime predicates as unprunable
-    (all files kept) while date predicates keep pruning."""
+def test_store_reads_only_format2_manifests(spark, tmp_path):
+    """One on-disk format: every commit path publishes
+    ``manifest_format`` 2 with ``stats_format`` 2 (UTC-normalized
+    timestamp stats, so a tz-aware datetime predicate prunes), and a
+    commit JSON lacking either marker is refused on load with
+    :class:`ManifestFormatError` naming the version and what it
+    found."""
     import datetime as _dt
-    import json as _json
-    import os as _os
+
+    from calorista_spark.sources.commitlog import ManifestFormatError
+    from calorista_spark.sources.commitlog_batch import register_batch_source
 
     prev_out = spark.conf.get("spark.sql.parquet.outputTimestampType")
     spark.conf.set(
         "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
     )
-    store = CommitLogStore(str(tmp_path / "s"))
+    path = str(tmp_path / "s")
+    store = CommitLogStore(path)
     try:
         df = spark.sql(
             "SELECT 1 AS k, TIMESTAMP'2024-01-05 03:00:00 UTC' AS ts, "
             "DATE'2024-01-05' AS d"
         )
-        v = store.commit(df, expect_version=None)
+        store.commit(df, expect_version=None, keys=["k"])
+        far_ts = [
+            ("ts", ">", _dt.datetime(2030, 1, 1, tzinfo=_dt.timezone.utc))
+        ]
+        assert store.files_for(far_ts) == []
+        # reads stay exact (the residual uses the original predicate)
+        assert store.read_where(spark, far_ts).count() == 0
+        store.merge(spark, df.selectExpr("2 AS k", "ts", "d"), ["k"])
+        store.delete_where(spark, [("k", "==", 1)], cow_threshold=None)
+        store.restore(to_version=1)
+        clone = store.clone(str(tmp_path / "c"))
+        register_batch_source(spark)
+        df.selectExpr("3 AS k", "ts", "d").write.format("commitlog").option(
+            "path", path
+        ).mode("append").save()
     finally:
         spark.conf.set("spark.sql.parquet.outputTimestampType", prev_out)
-    mpath = _os.path.join(store.commits_dir, f"v{v:08d}.json")
+    ops = []
+    for s, v in [(store, v) for v in store.versions()] + [(clone, 1)]:
+        meta = s.manifest_meta(v)
+        assert (meta["manifest_format"], meta["stats_format"]) == (2, 2)
+        ops.append(meta["op"])
+    assert ops == [
+        "overwrite", "merge", "delete", "restore", "append", "clone"
+    ]
+    mpath = os.path.join(store.commits_dir, "v00000001.json")
     with open(mpath) as fh:
-        m = _json.load(fh)
-    assert m["stats_format"] == 2
-    # marked manifest: a far-off datetime predicate prunes the file
-    far_ts = [("ts", ">", _dt.datetime(2030, 1, 1, tzinfo=_dt.timezone.utc))]
-    assert store.files_for(far_ts) == []
-    # strip the marker (simulated pre-r11 store): datetime predicates
-    # stop pruning, date predicates still do. A fresh store instance
-    # models the real scenario (old store opened by new code) — the
-    # tampering above edits an otherwise-immutable manifest, which the
-    # per-instance meta cache is allowed to assume never happens.
-    del m["stats_format"]
-    with open(mpath, "w") as fh:
-        _json.dump(m, fh)
-    store = CommitLogStore(str(tmp_path / "s"))
-    assert len(store.files_for(far_ts)) == 1
-    assert store.files_for([("d", ">", _dt.date(2030, 1, 1))]) == []
-    # and reads stay exact either way (residual uses the originals)
-    assert store.read_where(spark, far_ts).count() == 0
+        m = json.load(fh)
+    for marker in ("manifest_format", "stats_format"):
+        with open(mpath, "w") as fh:
+            json.dump({k: x for k, x in m.items() if k != marker}, fh)
+        fresh = CommitLogStore(path)  # cold caches: the file is re-read
+        with pytest.raises(ManifestFormatError, match=f"v1 .*{marker}=None"):
+            fresh.manifest_meta(1)
 
 
 # -- r11: commuting-writer rebase (VERDICT r10 #5) ---------------------------
@@ -2029,36 +2042,6 @@ def test_purge_dv_parses_only_dv_bearing_segments(
     assert store.read(spark).count() == 399
 
 
-def test_format1_manifest_stays_readable_and_migrates(spark, tmp_path):
-    """A format-1 (inline files/stats/dv) manifest — the pre-r12
-    on-disk shape — reads, prunes, DML-updates and CDFs exactly; the
-    NEXT commit publishes format 2."""
-    store = CommitLogStore(str(tmp_path / "s"))
-    store.commit(_range_parted(spark), partition_by="p", keys=["id"])
-    # rewrite v1 as an inline format-1 manifest (what r11 wrote)
-    m1 = dict(store.manifest(1))
-    mpath = os.path.join(store.commits_dir, "v00000001.json")
-    with open(mpath, "w") as fh:
-        json.dump(m1, fh)
-    store = CommitLogStore(str(tmp_path / "s"))  # fresh caches
-    assert store.manifest_meta(1).get("manifest_format", 1) == 1
-    assert store.read(spark).count() == 400
-    files = store.files_for([("id", "==", 7)])
-    assert 0 < len(files) < len(m1["files"])
-    assert store.last_prune_profile is None  # no segment structure
-    v2 = store.delete_where(spark, [("id", "==", 7)], cow_threshold=None)
-    assert store.manifest_meta(v2)["manifest_format"] == 2  # migrated
-    assert store.read(spark).count() == 399
-    inc = spark.createDataFrame([(5, "0", 999)], "id long, p string, v long")
-    v3 = store.merge(spark, inc, keys=["id"], partition_by="p")
-    assert store.read_where(spark, [("id", "==", 5)]).collect()[0].v == 999
-    ch = store.read_changes(spark, v2, v3)
-    assert {r["_change_type"] for r in ch.collect()} == {
-        "update_preimage",
-        "update_postimage",
-    }
-
-
 def test_vacuum_reaps_unreferenced_segments(spark, tmp_path):
     store = CommitLogStore(str(tmp_path / "s"))
     store.commit(_range_parted(spark), partition_by="p", keys=["id"])
@@ -2227,72 +2210,6 @@ def test_merge_with_no_usable_data_key_scopes_by_partition(spark, tmp_path):
     # untouched partition d1 carried by reference, touched d0 rewritten
     assert set(m2["partitions"]["d1"]) == set(m1["partitions"]["d1"])
     assert set(m2["partitions"]["d0"]) != set(m1["partitions"]["d0"])
-
-
-def test_carried_stats_keep_parent_stats_format(spark, tmp_path):
-    """A commit that carries per-file stats from a pre-r11 parent
-    (no stats_format marker) must NOT stamp the child manifest
-    format 2 — that would re-enable datetime pruning against naive,
-    un-normalized timestamp stats on the very next commit after the
-    store is opened by new code (silent misprune on a non-UTC
-    driver). Both DML composition and carry-by-reference merges must
-    propagate the parent's format; only a commit carrying nothing
-    old may upgrade."""
-    import datetime as _dt
-    import json as _json
-    import os as _os
-
-    prev_out = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
-    store = CommitLogStore(str(tmp_path / "s"))
-    try:
-        df = spark.sql(
-            "SELECT * FROM VALUES"
-            " ('d0', TIMESTAMP'2024-01-05 03:00:00 UTC', 1, 10),"
-            " ('d1', TIMESTAMP'2024-01-06 03:00:00 UTC', 2, 20)"
-            " AS t(d, ts, k, amt)"
-        )
-        v = store.commit(
-            df, expect_version=None, partition_by="d", keys=["d", "k"]
-        )
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", prev_out)
-    mpath = _os.path.join(store.commits_dir, f"v{v:08d}.json")
-    with open(mpath) as fh:
-        m = _json.load(fh)
-    del m["stats_format"]  # simulate a pre-r11 store
-    with open(mpath, "w") as fh:
-        _json.dump(m, fh)
-    store = CommitLogStore(str(tmp_path / "s"))  # fresh open, cold caches
-
-    far_ts = [("ts", ">", _dt.datetime(2030, 1, 1, tzinfo=_dt.timezone.utc))]
-    n_all = len(store.files_for(far_ts))
-    assert n_all >= 2  # unmarked parent: datetime predicates don't prune
-
-    # 1) merge into d0 — d1 carries by ref with its old stats
-    up = spark.createDataFrame(
-        [("d0", _dt.datetime(2024, 1, 5, 3, 0, 0), 1, 111)],
-        "d string, ts timestamp, k long, amt long",
-    )
-    store.merge(spark, up, ["d", "k"])
-    meta = store.manifest_meta(store.latest_version())
-    assert meta.get("stats_format", 1) < 2, meta.get("stats_format")
-    assert len(store.files_for(far_ts)) == len(store.files_for([]))
-
-    # 2) DV delete — surviving files keep parent-era stats
-    store.delete_where(spark, [("k", "==", 2)], cow_threshold=None)
-    meta = store.manifest_meta(store.latest_version())
-    assert meta.get("stats_format", 1) < 2, meta.get("stats_format")
-    assert len(store.files_for(far_ts)) == len(store.files_for([]))
-
-    # 3) a fresh store built from a full read carries nothing old and
-    # upgrades to format 2 (the documented migration path)
-    clean = CommitLogStore(str(tmp_path / "clean"))
-    clean.commit(store.read(spark), expect_version=None)
-    meta = clean.manifest_meta(clean.latest_version())
-    assert meta.get("stats_format") == 2
 
 
 def test_vacuum_tolerates_concurrently_deleted_manifest(spark, tmp_path):
